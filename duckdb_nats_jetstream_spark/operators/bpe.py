@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.text import (
     shingles,
     sql_norm,
@@ -72,13 +73,12 @@ def _pair_counts(enc: DataFrame) -> DataFrame:
 
 
 def _learn_merges(
-    df: DataFrame, rounds: int, text_col: str
-) -> tuple[DataFrame, DataFrame, list[tuple[str, int]]]:
-    """Shared training core: returns ``(base, enc, merges)`` — the
-    PERSISTED character-encoded vocabulary ``base`` (caller must
-    unpersist), the post-merge encoded vocabulary ``enc`` (a lazy chain
-    of per-round replaces over ``base``) and the chosen ``(pair, n)``
-    merges in order.
+    df: DataFrame, rounds: int, text_col: str, m: materialize.Scope
+) -> tuple[DataFrame, list[tuple[str, int]]]:
+    """Shared training core: returns ``(enc, merges)`` — the post-merge
+    encoded vocabulary ``enc`` (a lazy chain of per-round replaces over
+    the character-encoded vocabulary ``base``, cached in the caller's
+    scope ``m``) and the chosen ``(pair, n)`` merges in order.
 
     r13 optimization: the corpus-scale work is the ONE vocab aggregation,
     persisted once. Each round's replace is a row-local string op over
@@ -106,9 +106,7 @@ def _learn_merges(
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    base = vocab.select("w", "cnt", _encode(F.col("w")).alias("seq")).persist()
-
-    enc = base
+    enc = m.cache(vocab.select("w", "cnt", _encode(F.col("w")).alias("seq")))
     merges: list[tuple[str, int]] = []
     for _ in range(rounds):
         best = (
@@ -129,7 +127,7 @@ def _learn_merges(
                 F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>")
             ).alias("seq"),
         )
-    return base, enc, merges
+    return enc, merges
 
 
 def bpe_merge_table(
@@ -149,15 +147,15 @@ def bpe_merge_table(
     re-run all prior rounds' replacements).
     """
     spark = df.sparkSession
-    base, enc, merges = _learn_merges(df, rounds, text_col)
+    with materialize.scope("bpe_merge_table") as m:
+        enc, merges = _learn_merges(df, rounds, text_col, m)
+        frontier = (
+            _pair_counts(enc)
+            .orderBy(F.col("n").desc(), F.col("pair"))
+            .limit(top_k)
+            .collect()
+        )
     out_rows = [(r + 1, 1, pair, n) for r, (pair, n) in enumerate(merges)]
-    frontier = (
-        _pair_counts(enc)
-        .orderBy(F.col("n").desc(), F.col("pair"))
-        .limit(top_k)
-        .collect()
-    )
-    base.unpersist(blocking=True)
     out_rows += [
         (rounds + 1, i + 1, row.pair, row.n) for i, row in enumerate(frontier)
     ]
@@ -185,27 +183,25 @@ def bpe_token_counts(
     """
     from duckdb_nats_jetstream_spark.tables import spread
 
-    base, enc, _ = _learn_merges(df, rounds, text_col)
-    word_syms = enc.select(
-        "w",
-        F.size(F.expr(_SYMS)).cast("long").alias("n_syms"),
-        F.length("w").cast("long").alias("n_ch"),
-    )
-    exploded = spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")
-    ).filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
-    out = (
-        exploded.join(word_syms, "w")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_ch").alias("n_chars"),
-            F.sum("n_syms").alias("n_tokens"),
+    with materialize.scope("bpe_token_counts") as m:
+        enc, _ = _learn_merges(df, rounds, text_col, m)
+        word_syms = enc.select(
+            "w",
+            F.size(F.expr(_SYMS)).cast("long").alias("n_syms"),
+            F.length("w").cast("long").alias("n_ch"),
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    base.unpersist(blocking=True)
-    return out
+        exploded = spread(df).select(
+            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")
+        ).filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
+        return m.checkpoint(
+            exploded.join(word_syms, "w")
+            .groupBy(id_col)
+            .agg(
+                F.count("*").alias("n_words"),
+                F.sum("n_ch").alias("n_chars"),
+                F.sum("n_syms").alias("n_tokens"),
+            )
+        )
 
 
 def _sql_merge_ctes(rounds: int, table: str, text_col: str) -> tuple[str, str]:

@@ -25,8 +25,9 @@ sides, so the 100 TB fact side pays a shuffle write the hint would have
 avoided entirely.
 
 ``sized_broadcast`` closes the gap with a RUNTIME-sized hint:
-materialize the relation once (``localCheckpoint(eager=True)`` — also
-truncates the agg lineage so later consumers don't recompute it), count
+materialize the relation once (a lazy :func:`materialize.checkpoint` that
+the count realizes — it also truncates the agg lineage so later consumers
+don't recompute it), count
 the stored rows (a cheap job over the checkpointed partitions), and hint
 only when the realized count is under the cap. Above the cap the hint
 must be actively INVERTED, not merely dropped: Catalyst's size estimate
@@ -44,16 +45,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from duckdb_nats_jetstream_spark import materialize
+
 #: default cap: 5M rows x ~100 B/row ≈ 500 MB broadcast — near the
 #: practical ceiling for a comfortable executor/driver heap, well under
 #: Spark's hard 8 GB / 512M-row broadcast limits.
 DEFAULT_MAX_BROADCAST_ROWS = 5_000_000
 
 
-def _local_checkpoint(df: DataFrame) -> DataFrame:
-    """Default materializer: ``localCheckpoint(eager=False)`` — the
-    caller's first action computes+stores+counts in ONE job."""
-    return df.localCheckpoint(eager=False)
+def _lazy_checkpoint(df: DataFrame) -> DataFrame:
+    return materialize.checkpoint(df, eager=False)
 
 
 def sized_broadcast(
@@ -72,18 +73,12 @@ def sized_broadcast(
     ``F.broadcast``). Note the guarded path is EAGER — it runs the
     relation's plan once at call time.
 
-    **Cluster caveat (same as ``skew_join_ready``):** the default
-    materializer is ``localCheckpoint``, which stores blocks in EXECUTOR
-    storage, not reliable storage, and truncates lineage — if an executor
-    is lost (preemption, dynamic allocation down-scale) the blocks cannot
-    be recomputed and downstream jobs fail; blocks also persist until the
-    DataFrame is garbage-collected, with no explicit release API. On a
-    long-lived cluster deployment pass ``materializer=`` a reliable
-    alternative — e.g. ``lambda d: (d.write.parquet(p), spark.read
-    .parquet(p))[1]`` against a checkpoint dir, or ``df.checkpoint()``
-    with ``sparkContext.setCheckpointDir`` on HDFS/object storage. The
-    materializer must return a DataFrame whose ``count()`` realizes the
-    data exactly once.
+    The default materializer is a lazy :func:`materialize.checkpoint`
+    (see its module docstring for the ``localCheckpoint`` caveat), so the
+    count computes, stores and counts in ONE job. ``materializer=``
+    replaces it, e.g. with a write to reliable storage and a read back;
+    it must return a DataFrame whose ``count()`` realizes the data
+    exactly once.
     """
     from pyspark.sql import functions as F
 
@@ -91,7 +86,7 @@ def sized_broadcast(
         return F.broadcast(df)
     if max_rows < 0:
         raise ValueError(f"max_rows must be >= 0 or None, got {max_rows}")
-    small = (materializer or _local_checkpoint)(df)
+    small = (materializer or _lazy_checkpoint)(df)
     if small.count() <= max_rows:
         return F.broadcast(small)
     return small.hint("merge")

@@ -9,9 +9,8 @@ minimum label it has seen; fixpoint = each vertex holds its component's
 minimum id. Rounds needed = graph diameter — near-dup graphs are dense
 little clique-ish clusters, so 2-4 rounds in practice. Per round the cost
 is one edge-sized shuffle (join) + one vertex-sized aggregation, both plain
-DataFrame ops Catalyst/AQE handle; lineage is truncated per round with
-``localCheckpoint`` so the plan doesn't grow with iterations (on a cluster
-with an HDFS checkpoint dir, swap for ``checkpoint``).
+DataFrame ops Catalyst/AQE handle; lineage is truncated per round with a
+checkpoint (:mod:`materialize`) so the plan doesn't grow with iterations.
 
 For adversarial graphs (long chains / power-law), plain hash-min needs
 diameter rounds — a 10k-vertex chain would blow any fixed iteration budget
@@ -34,6 +33,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.errors import BindError
 
 
@@ -88,23 +88,19 @@ def connected_components(
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     if not edges_unique:
         und = und.distinct()
-    und = und.persist()
-    # Init IS the first propagation round: every vertex appears as `a` in the
-    # undirected edge list, so min(self, direct neighbors) in one aggregation
-    # replaces the separate vertex-distinct job + one full loop iteration.
-    labels = (
-        und.groupBy(F.col("a").alias("id"))
-        .agg(F.least(F.first("a"), F.min("b")).alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    try:
+    with materialize.scope("connected_components") as m:
+        und = m.cache(und)
+        # Init IS the first propagation round: every vertex appears as `a`
+        # in the undirected edge list, so min(self, direct neighbors) in one
+        # aggregation replaces the separate vertex-distinct job + one full
+        # loop iteration.
+        labels = m.checkpoint(
+            und.groupBy(F.col("a").alias("id"))
+            .agg(F.least(F.first("a"), F.min("b")).alias("comp"))
+        )
         if on_round is not None:
             on_round(1)  # the init aggregation IS the first propagation round
-        labels = _propagate(und, labels, max_iter, skew_safe, on_round)
-    finally:
-        # a raising on_round callback (or any mid-loop failure) must not
-        # leak the persisted edge relation into the session cache manager
-        und.unpersist(blocking=True)
+        labels = _propagate(m, und, labels, max_iter, skew_safe, on_round)
     return labels.select(F.col("id").alias(id_out), F.col("comp").alias(comp_out))
 
 
@@ -179,7 +175,7 @@ def connected_components_bounded(
     return edges.sparkSession.createDataFrame(labels, schema)
 
 
-def _propagate(und, labels, max_iter, skew_safe, on_round):
+def _propagate(m, und, labels, max_iter, skew_safe, on_round):
     """Iterate propagation + pointer-doubling rounds to the fixpoint."""
     from pyspark.sql import Observation
 
@@ -205,7 +201,7 @@ def _propagate(und, labels, max_iter, skew_safe, on_round):
         if skew_safe:
             # cut the nbr_min aggregate out of the hop join's stage so
             # AQE can split the converged-label hot key (see docstring)
-            stepped = stepped.localCheckpoint(eager=False)
+            stepped = materialize.checkpoint(stepped, eager=False)
         hop = stepped.select(
             F.col("id").alias("cid"), F.col("comp1").alias("ccomp")
         )
@@ -233,7 +229,7 @@ def _propagate(und, labels, max_iter, skew_safe, on_round):
             )
             .observe(obs, F.sum(F.col("upd").cast("long")).alias("n_upd"))
         )
-        labels = observed.localCheckpoint(eager=True)
+        labels = m.checkpoint(observed)
         if on_round is not None:
             on_round(_round)
         if labels is observed:

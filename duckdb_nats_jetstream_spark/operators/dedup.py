@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.text import (
     fingerprint,
     jaccard,
@@ -128,42 +129,39 @@ def minhash_lsh_pairs(
     on band key (the only shuffle proportional to corpus size) → exact
     Jaccard verification of candidates. Returns (id_a, id_b, jaccard_r).
     """
-    # cache the shingled docs: they feed the signature pipeline AND the two
-    # candidate-verification joins — without this the whole tokenize+shingle
-    # stage recomputes three times
-    docs = _with_shingles(df, text_col, id_col, n).persist()
-    # Shuffle only (id, band_key) through the self-join — never the shingle
-    # arrays. Candidate pairs are few; their shingles come back via two
-    # broadcast joins against the (small relative to the log) docs relation.
-    banded = _banded_signatures(docs, id_col, k, band_size)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    with materialize.scope("minhash_lsh_pairs") as m:
+        # cache the shingled docs: they feed the signature pipeline AND the
+        # two candidate-verification joins — without this the whole
+        # tokenize+shingle stage recomputes three times
+        docs = m.cache(_with_shingles(df, text_col, id_col, n))
+        # Shuffle only (id, band_key) through the self-join — never the
+        # shingle arrays. Candidate pairs are few; their shingles come back
+        # via two broadcast joins against the (small relative to the log)
+        # docs relation.
+        banded = _banded_signatures(docs, id_col, k, band_size)
+        a = banded.alias("a")
+        b = banded.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band_key") == F.col("b.band_key"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+            )
+            .distinct()
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+        sh_a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+        sh_b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+        return m.checkpoint(
+            cand.join(sh_a, "id_a")
+            .join(sh_b, "id_b")
+            .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
+            .filter(F.col("jac") >= threshold)
+            .select("id_a", "id_b", F.col("jac").alias("jaccard_r"))
         )
-        .distinct()
-    )
-    sh_a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    out = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b", F.col("jac").alias("jaccard_r"))
-    )
-    # release the shingle cache once the result is materialized; blocking=False
-    # so a consumer that hasn't run yet just recomputes
-    out = out.localCheckpoint(eager=True)
-    docs.unpersist(blocking=True)
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -469,28 +467,26 @@ def winnow_pairs(
         )
 
     # UNCAPPED opt-in (exhaustive oracle twin): the self-join needs the
-    # fingerprint relation on both sides — persist it so the whole
+    # fingerprint relation on both sides — cache it so the whole
     # k-gram/window pipeline doesn't run twice (same pattern as
-    # minhash_lsh_pairs; on a cluster swap localCheckpoint for checkpoint)
-    fps_cached = winnow_fingerprints(df, text_col, id_col, k, w).persist()
-    a = fps_cached.alias("a")
-    b = fps_cached.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    # minhash_lsh_pairs)
+    with materialize.scope("winnow_pairs") as m:
+        fps_cached = m.cache(winnow_fingerprints(df, text_col, id_col, k, w))
+        a = fps_cached.alias("a")
+        b = fps_cached.alias("b")
+        return m.checkpoint(
+            a.join(
+                b,
+                (F.col("a.fp") == F.col("b.fp"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .groupBy(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+            )
+            .agg(F.count("*").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    out = out.localCheckpoint(eager=True)
-    fps_cached.unpersist(blocking=True)
-    return out
 
 
 def embedding_near_dup_pairs(
@@ -616,42 +612,39 @@ def dup_span_stats(
     from duckdb_nats_jetstream_spark.functions.text import shingles, tokens
     from duckdb_nats_jetstream_spark.tables import spread
 
-    grams = (
-        spread(df)
-        .select(
-            F.col(id_col),
-            F.explode(shingles(tokens(F.col(text_col)), n)).alias("__s"),
+    with materialize.scope("dup_span_stats") as m:
+        grams = m.cache(
+            spread(df)
+            .select(
+                F.col(id_col),
+                F.explode(shingles(tokens(F.col(text_col)), n)).alias("__s"),
+            )
+            .select(id_col, F.substring(F.md5("__s"), 1, 8).alias("fp"))
         )
-        .select(id_col, F.substring(F.md5("__s"), 1, 8).alias("fp"))
-        .persist()
-    )
-    # "appears in ≥2 DISTINCT docs" ⟺ min(id) < max(id): count_distinct
-    # plans as TWO exchanges (partial distinct on (fp, id), then the merge),
-    # min/max as ONE (guide §2.4 — r13 optimization round; NULL ids agree:
-    # both formulations ignore them)
-    hot = (
-        grams.groupBy("fp")
-        .agg(F.min(id_col).alias("__mn"), F.max(id_col).alias("__mx"))
-        .filter(F.col("__mn") < F.col("__mx"))
-        .select("fp", F.lit(1).alias("__hot"))
-    )
-    out = (
-        grams.join(hot, "fp", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.count("__hot").alias("n_dup_spans"),
+        # "appears in ≥2 DISTINCT docs" ⟺ min(id) < max(id): count_distinct
+        # plans as TWO exchanges (partial distinct on (fp, id), then the
+        # merge), min/max as ONE (guide §2.4 — r13 optimization round; NULL
+        # ids agree: both formulations ignore them)
+        hot = (
+            grams.groupBy("fp")
+            .agg(F.min(id_col).alias("__mn"), F.max(id_col).alias("__mx"))
+            .filter(F.col("__mn") < F.col("__mx"))
+            .select("fp", F.lit(1).alias("__hot"))
         )
-        .select(
-            id_col,
-            "n_spans",
-            "n_dup_spans",
-            (F.col("n_dup_spans") / F.col("n_spans")).alias("dup_frac"),
+        return m.checkpoint(
+            grams.join(hot, "fp", "left")
+            .groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).alias("n_spans"),
+                F.count("__hot").alias("n_dup_spans"),
+            )
+            .select(
+                id_col,
+                "n_spans",
+                "n_dup_spans",
+                (F.col("n_dup_spans") / F.col("n_spans")).alias("dup_frac"),
+            )
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    grams.unpersist(blocking=True)
-    return out
 
 
 def sql_dup_span_stats(n: int = 13, table: str = "documents") -> str:
@@ -783,11 +776,9 @@ def incremental_near_dups(
     corpus text is never rescanned per batch. Candidate verification
     fetches only the matched candidates' shingles via join-back.
     """
-    new_sh = _with_shingles(new_df, text_col, id_col, n)
-    ref_sh = _with_shingles(ref_df, text_col, id_col, n)
-    new_sh.persist()
-    ref_sh.persist()
-    try:
+    with materialize.scope("incremental_near_dups") as m:
+        new_sh = m.cache(_with_shingles(new_df, text_col, id_col, n))
+        ref_sh = m.cache(_with_shingles(ref_df, text_col, id_col, n))
         out = _screen_against_reference(
             new_sh,
             _banded_signatures(new_sh, id_col, k, band_size),
@@ -796,14 +787,7 @@ def incremental_near_dups(
             id_col,
             threshold,
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        # finally, not straight-line: an executor failure mid-screen must
-        # not leave two corpus-sized shingle relations pinned in executor
-        # storage for the session lifetime (cache-hygiene pattern; the
-        # stored twin below has always done it this way)
-        new_sh.unpersist(blocking=True)
-        ref_sh.unpersist(blocking=True)
+        return m.checkpoint(out)
 
 
 def _screen_against_reference(
@@ -902,9 +886,8 @@ def incremental_near_dups_stored(
     O(batch grams) + two store joins; the corpus text is never rescanned.
     ``k``/``band_size``/``n`` must match the store build (they
     parameterize only the batch side here)."""
-    new_sh = _with_shingles(new_df, text_col, id_col, n)
-    new_sh.persist()
-    try:
+    with materialize.scope("incremental_near_dups_stored") as m:
+        new_sh = m.cache(_with_shingles(new_df, text_col, id_col, n))
         out = _screen_against_reference(
             new_sh,
             _banded_signatures(new_sh, id_col, k, band_size),
@@ -913,9 +896,7 @@ def incremental_near_dups_stored(
             id_col,
             threshold,
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        new_sh.unpersist(blocking=True)
+        return m.checkpoint(out)
 
 
 def sql_incremental_near_dups(
@@ -1004,40 +985,39 @@ def span_scrub(
         (F.col("__p0") + 1).alias("p"),  # 1-based gram start
         F.substring(F.md5("__s"), 1, 8).alias("fp"),
     )
-    grams = grams.persist()
-    # min(id) < max(id) ⟺ ≥2 distinct docs — one exchange instead of the
-    # distinct-agg's two (same rewrite as dup_span_stats; r13 optimization)
-    hot = (
-        grams.groupBy("fp")
-        .agg(F.min(id_col).alias("__mn"), F.max(id_col).alias("__mx"))
-        .filter(F.col("__mn") < F.col("__mx"))
-        .select("fp")
-    )
-    starts = (
-        grams.join(hot, "fp", "left_semi")
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list("p")).alias("starts"))
-    )
-    joined = toked.join(starts, id_col, "left").select(
-        id_col,
-        "__t",
-        F.coalesce(F.col("starts"), F.array().cast("array<int>")).alias("st"),
-    )
-    kept = F.filter(
-        "__t",
-        lambda t, j: ~F.exists(
-            "st", lambda s: (s <= j + 1) & (j + 1 <= s + F.lit(n - 1))
-        ),
-    )
-    out = joined.select(
-        F.col(id_col),
-        F.size("__t").cast("long").alias("n_tokens"),
-        (F.size("__t") - F.size(kept)).cast("long").alias("n_removed"),
-        F.array_join(kept, " ").alias("scrubbed"),
-    )
-    out = out.localCheckpoint(eager=True)
-    grams.unpersist(blocking=True)
-    return out
+    with materialize.scope("span_scrub") as m:
+        grams = m.cache(grams)
+        # min(id) < max(id) ⟺ ≥2 distinct docs — one exchange instead of the
+        # distinct-agg's two (same rewrite as dup_span_stats; r13 optimization)
+        hot = (
+            grams.groupBy("fp")
+            .agg(F.min(id_col).alias("__mn"), F.max(id_col).alias("__mx"))
+            .filter(F.col("__mn") < F.col("__mx"))
+            .select("fp")
+        )
+        starts = (
+            grams.join(hot, "fp", "left_semi")
+            .groupBy(id_col)
+            .agg(F.array_sort(F.collect_list("p")).alias("starts"))
+        )
+        joined = toked.join(starts, id_col, "left").select(
+            id_col,
+            "__t",
+            F.coalesce(F.col("starts"), F.array().cast("array<int>")).alias("st"),
+        )
+        kept = F.filter(
+            "__t",
+            lambda t, j: ~F.exists(
+                "st", lambda s: (s <= j + 1) & (j + 1 <= s + F.lit(n - 1))
+            ),
+        )
+        out = joined.select(
+            F.col(id_col),
+            F.size("__t").cast("long").alias("n_tokens"),
+            (F.size("__t") - F.size(kept)).cast("long").alias("n_removed"),
+            F.array_join(kept, " ").alias("scrubbed"),
+        )
+        return m.checkpoint(out)
 
 
 def sql_span_scrub(n: int = 13, table: str = "documents") -> str:

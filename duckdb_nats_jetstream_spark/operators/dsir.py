@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.functions.classifier import (
     _check_n_buckets,
@@ -80,65 +81,66 @@ def dsir_select(
         F.coalesce(is_target, F.lit(False)).alias("__t"),
         F.explode(hashed_feature_buckets(F.col(text_col), n)).alias("__b"),
     )
-    # per-(doc, bucket) counts: the only corpus-sized shuffle (map-side
-    # combine on (id, t, b)). Two consumers — the LM/weight chain and
-    # the scoring join — i.e. the classic two-pass stats-then-score
-    # shape. The first draft's per-side filter chain ran FIVE scans
-    # (8.3 s at sf0.1 / 213 s at sf10); two memoized-Arrow passes + one
-    # conditional-agg pivot was the r13-build fix. r14 (§2.3/§5, the
-    # bm25/domain_shift pattern): both consumers replanned the
-    # explode+md5-hash subtree — two full feature-hash passes over the
-    # text. ``db`` is a NARROW integer relation, far smaller than the
-    # text it derives from, so it is persisted once and the bounded
-    # top-k output eager-checkpointed so the cache drops before return
-    # († lifecycle). One feature-hash pass, two cheap cached passes.
-    db = fb.groupBy(id_col, "__t", "__b").agg(
-        F.count(F.lit(1)).cast("long").alias("__c")
-    ).persist()
-    # both sides' bucket LMs in ONE conditional aggregation (n_buckets
-    # rows), totals in one more row — no per-side re-scans
-    sc = db.groupBy("__b").agg(
-        F.sum(F.when(F.col("__t"), F.col("__c")).otherwise(F.lit(0)))
-        .alias("__ct"),
-        F.sum(F.when(~F.col("__t"), F.col("__c")).otherwise(F.lit(0)))
-        .alias("__cr"),
-    )
-    # empty-target contract: with no target rows the pivot would yield a
-    # sum-of-zeros row (not an empty relation), and bin(0) has "0 bits",
-    # silently scoring against a vacuous LM — filter keeps the documented
-    # "no distribution to match → empty result" semantics (and mirrors
-    # the oracle's per-side subquery going empty)
-    tot = sc.agg(
-        F.sum("__ct").alias("__tt"), F.sum("__cr").alias("__tr")
-    ).filter(F.col("__tt") > 0)
-    bits_r = F.length(F.bin(F.expr("__tr div (coalesce(__cr, 0L) + 1L)"))) - 1
-    bits_t = F.length(F.bin(F.expr("__tt div (coalesce(__ct, 0L) + 1L)"))) - 1
-    weights = (
-        spark.range(n).select(F.col("id").alias("__b"))
-        .join(sc, "__b", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "__b",
-            (bits_r.cast("long") - bits_t.cast("long")).alias("__wb"),
+    with materialize.scope("dsir_select") as m:
+        # per-(doc, bucket) counts: the only corpus-sized shuffle (map-side
+        # combine on (id, t, b)). Two consumers — the LM/weight chain and
+        # the scoring join — i.e. the classic two-pass stats-then-score
+        # shape. The first draft's per-side filter chain ran FIVE scans
+        # (8.3 s at sf0.1 / 213 s at sf10); two memoized-Arrow passes + one
+        # conditional-agg pivot was the r13-build fix. r14 (§2.3/§5, the
+        # bm25/domain_shift pattern): both consumers replanned the
+        # explode+md5-hash subtree — two full feature-hash passes over the
+        # text. ``db`` is a NARROW integer relation, far smaller than the
+        # text it derives from, so it is cached once and the bounded top-k
+        # output checkpointed so the cache drops before return
+        # (materialize.scope). One feature-hash pass, two cheap cached
+        # passes.
+        c = F.count(F.lit(1)).cast("long").alias("__c")
+        db = m.cache(fb.groupBy(id_col, "__t", "__b").agg(c))
+        # both sides' bucket LMs in ONE conditional aggregation (n_buckets
+        # rows), totals in one more row — no per-side re-scans
+        sc = db.groupBy("__b").agg(
+            F.sum(F.when(F.col("__t"), F.col("__c")).otherwise(F.lit(0)))
+            .alias("__ct"),
+            F.sum(F.when(~F.col("__t"), F.col("__c")).otherwise(F.lit(0)))
+            .alias("__cr"),
         )
-    )
-    scored = (
-        db.filter(~F.col("__t"))
-        .join(F.broadcast(weights), "__b")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("__c") * F.col("__wb")).cast("long").alias("dsir_weight"))
-    )
-    out = scored
-    if keep:
-        out = scored.join(df.select(id_col, *keep), id_col)
-    out = (
-        out.select(id_col, *keep, "dsir_weight")
-        .orderBy(F.col("dsir_weight").desc(), F.col(id_col))
-        .limit(topk)
-    )
-    out = out.localCheckpoint(eager=True)
-    db.unpersist(blocking=True)
-    return out
+        # empty-target contract: with no target rows the pivot would yield a
+        # sum-of-zeros row (not an empty relation), and bin(0) has "0 bits",
+        # silently scoring against a vacuous LM — filter keeps the documented
+        # "no distribution to match → empty result" semantics (and mirrors
+        # the oracle's per-side subquery going empty)
+        tot = sc.agg(
+            F.sum("__ct").alias("__tt"), F.sum("__cr").alias("__tr")
+        ).filter(F.col("__tt") > 0)
+        bits_r = F.length(F.bin(F.expr("__tr div (coalesce(__cr, 0L) + 1L)"))) - 1
+        bits_t = F.length(F.bin(F.expr("__tt div (coalesce(__ct, 0L) + 1L)"))) - 1
+        weights = (
+            spark.range(n).select(F.col("id").alias("__b"))
+            .join(sc, "__b", "left")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "__b",
+                (bits_r.cast("long") - bits_t.cast("long")).alias("__wb"),
+            )
+        )
+        scored = (
+            db.filter(~F.col("__t"))
+            .join(F.broadcast(weights), "__b")
+            .groupBy(id_col)
+            .agg(
+                F.sum(F.col("__c") * F.col("__wb")).cast("long").alias("dsir_weight")
+            )
+        )
+        out = scored
+        if keep:
+            out = scored.join(df.select(id_col, *keep), id_col)
+        out = (
+            out.select(id_col, *keep, "dsir_weight")
+            .orderBy(F.col("dsir_weight").desc(), F.col(id_col))
+            .limit(topk)
+        )
+        return m.checkpoint(out)
 
 
 def sql_dsir_select(

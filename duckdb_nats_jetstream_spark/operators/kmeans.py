@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.vector_np import fold_d2
 from duckdb_nats_jetstream_spark.tables import spread
 
@@ -159,8 +160,8 @@ def kmeans_cluster_sizes(
     # the self-join below would otherwise EACH re-run the quantize + two
     # Arrow assignment passes — the dominant cost, doubled for nothing
     # (r09 review)
-    a = kmeans_assignments(df, k, vec_col, id_col, dim).localCheckpoint(
-        eager=True
+    a = materialize.checkpoint(
+        kmeans_assignments(df, k, vec_col, id_col, dim), eager=True
     )
     i1 = a.groupBy(F.col("cluster_iter1").alias("cluster")).agg(
         F.count("*").alias("n_iter1")

@@ -43,6 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators.similarity import sql_lit_f64
@@ -201,7 +202,7 @@ def _topk_from_base(
     b: float,
     id_col: str,
     score_out: str,
-    defer: list[DataFrame] | None = None,
+    scope: materialize.Scope | None = None,
 ) -> DataFrame:
     """Shared top-k assembly with the single-scan lifecycle (r13
     optimization): the stats aggregate and the scoring projection both
@@ -209,38 +210,30 @@ def _topk_from_base(
     side is a broadcast, so there is no exchange to reuse) — at corpus
     scale that is two full tokenize/tf passes over the text. ``base`` is
     a NARROW integer relation (id, dl, tf_0..n), far smaller than the
-    text it derives from, so persisting it turns BM25 into one text scan
+    text it derives from, so caching it turns BM25 into one text scan
     + two cheap cached passes.
 
-    Default lifecycle (``defer=None``): the bounded top-k output is
-    eager-checkpointed so the cache can be dropped before returning (the
-    package's † persist → localCheckpoint(eager) → unpersist lifecycle).
-    NOTE this makes the call execute EAGERLY at build time, and
-    localCheckpoint output is not recomputable on executor loss — on a
-    cluster with a checkpoint dir, swap for ``checkpoint`` (r13 ADVICE).
-
-    ``defer`` (r14): a caller fusing SEVERAL bounded candidate lists
-    passes a list; the persisted base is appended to it and the top-k
-    plan is returned LAZY, so the caller can materialize all branches in
-    ONE action (independent subtrees overlap inside a single job instead
-    of serializing per-branch eager checkpoints — guide §2.6; the r13
-    per-branch form cost the hybrids 0.69–0.77x) and then unpersist
-    every deferred cache itself."""
-    cached = base.persist()
-    scored = _bm25_from_base(cached, n_terms, k1, b, id_col)
+    Without ``scope`` the bounded top-k output is eager-checkpointed in
+    the operator's own :func:`materialize.scope`, so the call executes
+    EAGERLY at build time. A caller fusing SEVERAL bounded candidate
+    lists passes its open ``scope``: the base is cached in it and the
+    top-k plan is returned LAZY, so the fusion materializes every branch
+    in ONE ``scope.checkpoint`` (independent subtrees overlap inside a
+    single job instead of serializing per-branch eager checkpoints —
+    guide §2.6; the r13 per-branch form cost the hybrids 0.69–0.77x)."""
+    if scope is None:
+        with materialize.scope("bm25_topk") as m:
+            return m.checkpoint(
+                _topk_from_base(base, n_terms, topk, k1, b, id_col, score_out, m)
+            )
+    scored = _bm25_from_base(scope.cache(base), n_terms, k1, b, id_col)
     top = scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(topk)
     w = W.orderBy(F.col("score").desc(), F.col(id_col))
-    out = top.select(
+    return top.select(
         F.col(id_col),
         F.row_number().over(w).cast("long").alias("rnk"),
         F.col("score").alias(score_out),
     )
-    if defer is not None:
-        defer.append(cached)
-        return out
-    out = out.localCheckpoint(eager=True)
-    cached.unpersist(blocking=True)
-    return out
 
 
 def bm25_topk(
@@ -251,7 +244,7 @@ def bm25_topk(
     b: float = DEFAULT_B,
     text_col: str = "text",
     id_col: str = "doc_id",
-    defer: list[DataFrame] | None = None,
+    scope: materialize.Scope | None = None,
 ) -> DataFrame:
     """Top-``topk`` documents by BM25 → ``(id_col, rnk, bm25_r)``.
 
@@ -259,14 +252,14 @@ def bm25_topk(
     heap + driver merge of k rows); ``row_number`` then runs over the k
     surviving rows only — the unpartitioned window is bounded by
     construction, never corpus-sized. One text scan; executes EAGERLY
-    unless ``defer`` is passed by a multi-branch fusion caller: see
+    unless a multi-branch fusion caller passes its open ``scope``: see
     :func:`_topk_from_base`.
     """
     _require_terms(terms, "bm25_topk")
     _guard_id_col(id_col, len(terms), "bm25_topk")
     base = _word_base(docs, terms, text_col, id_col)
     return _topk_from_base(
-        base, len(terms), topk, k1, b, id_col, "bm25_r", defer=defer
+        base, len(terms), topk, k1, b, id_col, "bm25_r", scope
     )
 
 
@@ -333,17 +326,17 @@ def bm25_phrase_topk(
     b: float = DEFAULT_B,
     text_col: str = "text",
     id_col: str = "doc_id",
-    defer: list[DataFrame] | None = None,
+    scope: materialize.Scope | None = None,
 ) -> DataFrame:
     """Top-``topk`` documents by phrase BM25 → ``(id_col, rnk, score)``
     (TakeOrderedAndProject + a window over the k survivors, like
-    :func:`bm25_topk`). One text scan; eager unless ``defer`` is passed:
+    :func:`bm25_topk`). One text scan; eager unless ``scope`` is passed:
     see :func:`_topk_from_base`."""
     _require_phrases(phrases, "bm25_phrase_topk")
     _guard_id_col(id_col, len(phrases), "bm25_phrase_topk")
     base = _phrase_base(docs, phrases, text_col, id_col)
     return _topk_from_base(
-        base, len(phrases), topk, k1, b, id_col, "score", defer=defer
+        base, len(phrases), topk, k1, b, id_col, "score", scope
     )
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.text import sql_norm, tokens
 
 
@@ -90,42 +91,39 @@ def countmin_estimates(
     sketch exists precisely so the exact per-token shuffle isn't needed;
     it's here to make the sketch's accuracy auditable by the oracle gate).
     """
-    toks = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .filter(F.col("t") != "")
-    )
-    toks = toks.persist()
-    sketch = _sketch_of(toks, depth, width_hex)
+    with materialize.scope("countmin_estimates") as m:
+        toks = m.cache(
+            df.select(F.explode(tokens(F.col(text_col))).alias("t"))
+            .filter(F.col("t") != "")
+        )
+        sketch = _sketch_of(toks, depth, width_hex)
 
-    exact = (
-        toks.groupBy("t")
-        .agg(F.count("*").alias("true_n"))
-        .orderBy(F.col("true_n").desc(), F.col("t"))
-        .limit(top_k)
-    )
-    probes = exact.select(
-        "t",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cell(F.col("t"), d, width_hex).alias("cell"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("s"),
-    ).select("t", "true_n", F.col("s.d").alias("d"), F.col("s.cell").alias("cell"))
-    out = (
-        probes.join(F.broadcast(sketch), ["d", "cell"])
-        .groupBy(F.col("t").alias("token"), "true_n")
-        .agg(F.min("n").alias("est_n"))
-    )
-    out = out.localCheckpoint(eager=True)
-    toks.unpersist(blocking=True)
-    return out
+        exact = (
+            toks.groupBy("t")
+            .agg(F.count("*").alias("true_n"))
+            .orderBy(F.col("true_n").desc(), F.col("t"))
+            .limit(top_k)
+        )
+        probes = exact.select(
+            "t",
+            "true_n",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(d).alias("d"),
+                            _cell(F.col("t"), d, width_hex).alias("cell"),
+                        )
+                        for d in range(depth)
+                    ]
+                )
+            ).alias("s"),
+        ).select("t", "true_n", F.col("s.d").alias("d"), F.col("s.cell").alias("cell"))
+        return m.checkpoint(
+            probes.join(F.broadcast(sketch), ["d", "cell"])
+            .groupBy(F.col("t").alias("token"), "true_n")
+            .agg(F.min("n").alias("est_n"))
+        )
 
 
 def sql_countmin_estimates(

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
+
 
 def salted_agg(
     df: DataFrame,
@@ -68,10 +70,8 @@ def skew_join_ready(df: DataFrame, eager: bool = True) -> DataFrame:
     materialized side flattens to 1.1× and runs 3× faster end-to-end.
 
     Call this on the aggregate side BEFORE joining it against a
-    potentially skewed fact. Locally this is an eager ``localCheckpoint``;
-    on a cluster swap for ``checkpoint`` or a staging write (same
-    guidance as every other lineage-truncation site in the package).
+    potentially skewed fact; it is a :func:`materialize.checkpoint`.
     Only needed when the other side is a skew-prone FACT — aggregate ⋈
     aggregate joins have one row per key per side and cannot skew.
     """
-    return df.localCheckpoint(eager=eager)
+    return materialize.checkpoint(df, eager=eager)

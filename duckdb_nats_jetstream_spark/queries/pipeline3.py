@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators import similarity as S
 from duckdb_nats_jetstream_spark.tables import read_table, spread
@@ -948,58 +949,55 @@ def docs_domain_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = spread(read_table(spark, sf_dir, "documents")).select(
         "source", F.explode(TX.tokens(F.col("text"))).alias("token")
     )
-    # persisted (r13): three consumers below (corpus top-50, per-source
-    # totals, the scoring join) each replanned the tokenize→explode→agg
-    # subtree — three corpus scans instead of one. † lifecycle: the
-    # per-source result is eager-checkpointed before unpersist.
-    st = (
-        tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("o")).persist()
-    )
-    corpus = (
-        st.groupBy("token")
-        .agg(F.sum("o").alias("c"))
-        .orderBy(F.col("c").desc(), "token")
-        .limit(50)
-    )
-    totals = st.groupBy("source").agg(F.sum("o").alias("src_total"))
-    corpus_total = corpus.agg(F.sum("c").alias("ct"))
-    # 50-row (token, c, ct) side is explicitly broadcast: the cross joins
-    # plan as BroadcastNestedLoopJoin over a tiny build side, never a
-    # shuffled cartesian
-    small = F.broadcast(corpus.crossJoin(F.broadcast(corpus_total)))
-    j = (
-        totals.crossJoin(small)
-        .join(st, ["source", "token"], "left")
-        .select(
-            "source",
-            "token",
-            F.coalesce(F.col("o"), F.lit(0)).cast("long").alias("o"),
-            "c",
-            "src_total",
-            "ct",
+    with materialize.scope("docs_domain_shift") as m:
+        # cached (r13): three consumers below (corpus top-50, per-source
+        # totals, the scoring join) each replanned the tokenize→explode→agg
+        # subtree — three corpus scans instead of one. materialize.scope:
+        # the per-source result is checkpointed before the cache drops.
+        st = m.cache(tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("o")))
+        corpus = (
+            st.groupBy("token")
+            .agg(F.sum("o").alias("c"))
+            .orderBy(F.col("c").desc(), "token")
+            .limit(50)
         )
-    )
-    # fold over tokens sorted by name so the double sum order is pinned
-    per_tok = j.select(
-        "source",
-        "src_total",
-        F.struct("token", "o", "c", "ct").alias("s"),
-    )
-    agg = per_tok.groupBy("source", "src_total").agg(
-        F.array_sort(F.collect_list("s")).alias("xs")
-    )
-    term = lambda acc, x: acc + (  # noqa: E731
-        (x["o"] - (x["c"] * F.col("src_total")) / x["ct"])
-        * (x["o"] - (x["c"] * F.col("src_total")) / x["ct"])
-    ) / ((x["c"] * F.col("src_total")) / x["ct"])
-    out = agg.select(
-        "source",
-        F.col("src_total").cast("long").alias("n_tokens"),
-        F.aggregate("xs", F.lit(0.0), term).alias("chi2"),
-    )
-    out = out.localCheckpoint(eager=True)
-    st.unpersist(blocking=True)
-    return out
+        totals = st.groupBy("source").agg(F.sum("o").alias("src_total"))
+        corpus_total = corpus.agg(F.sum("c").alias("ct"))
+        # 50-row (token, c, ct) side is explicitly broadcast: the cross joins
+        # plan as BroadcastNestedLoopJoin over a tiny build side, never a
+        # shuffled cartesian
+        small = F.broadcast(corpus.crossJoin(F.broadcast(corpus_total)))
+        j = (
+            totals.crossJoin(small)
+            .join(st, ["source", "token"], "left")
+            .select(
+                "source",
+                "token",
+                F.coalesce(F.col("o"), F.lit(0)).cast("long").alias("o"),
+                "c",
+                "src_total",
+                "ct",
+            )
+        )
+        # fold over tokens sorted by name so the double sum order is pinned
+        per_tok = j.select(
+            "source",
+            "src_total",
+            F.struct("token", "o", "c", "ct").alias("s"),
+        )
+        agg = per_tok.groupBy("source", "src_total").agg(
+            F.array_sort(F.collect_list("s")).alias("xs")
+        )
+        term = lambda acc, x: acc + (  # noqa: E731
+            (x["o"] - (x["c"] * F.col("src_total")) / x["ct"])
+            * (x["o"] - (x["c"] * F.col("src_total")) / x["ct"])
+        ) / ((x["c"] * F.col("src_total")) / x["ct"])
+        out = agg.select(
+            "source",
+            F.col("src_total").cast("long").alias("n_tokens"),
+            F.aggregate("xs", F.lit(0.0), term).alias("chi2"),
+        )
+        return m.checkpoint(out)
 
 
 DOMAIN_SHIFT_SQL = f"""

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions import exact as EX
 from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators import funnel as FN
@@ -82,7 +83,7 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
     row on ``token``, a stopword-skewed key whose hottest group one window
     task must buffer (a §2.5 straggler/spill hazard at corpus scale; the
     r13 driver also measured it 29 % slower locally). Now the narrow
-    (doc_id, token, c) relation is persisted ONCE († lifecycle — the
+    (doc_id, token, c) relation is cached ONCE (``materialize.scope`` — the
     caller-facing result is eager-checkpointed and the cache dropped
     before return), the vocab is a hash aggregate over the cache with
     map-side partial aggregation (the skew-proof reduction), the corpus
@@ -90,23 +91,21 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
     vocab via the join Catalyst picks (broadcast when the vocab estimate
     is small, SMJ co-keyed on token otherwise). One tokenize pass, zero
     token-keyed windows."""
-    dtc = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c")).persist()
-    vocab = dtc.groupBy("token").agg(F.sum("c").alias("n"))
-    total = vocab.agg(F.sum("n").alias("total"))
-    bits = F.length(F.bin(F.expr("total div n"))) - 1
-    out = (
-        dtc.join(vocab, "token")
-        .crossJoin(F.broadcast(total))
-        .select("doc_id", "c", bits.cast("long").alias("bits"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.sum(F.col("c") * F.col("bits")).cast("long").alias("bits_total"),
+    with materialize.scope("unigram_bit_scores") as m:
+        dtc = m.cache(tok.groupBy("doc_id", "token").agg(F.count("*").alias("c")))
+        vocab = dtc.groupBy("token").agg(F.sum("c").alias("n"))
+        total = vocab.agg(F.sum("n").alias("total"))
+        bits = F.length(F.bin(F.expr("total div n"))) - 1
+        return m.checkpoint(
+            dtc.join(vocab, "token")
+            .crossJoin(F.broadcast(total))
+            .select("doc_id", "c", bits.cast("long").alias("bits"))
+            .groupBy("doc_id")
+            .agg(
+                F.sum("c").cast("long").alias("n_tokens"),
+                F.sum(F.col("c") * F.col("bits")).cast("long").alias("bits_total"),
+            )
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    dtc.unpersist(blocking=True)
-    return out
 
 
 def text_unigram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,8 +401,8 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's duration: each is consumed 2-3× (self-as-join-side plus its
     own total), and without the cache every consumer re-tokenizes the
     corpus — 5 full scans at 100 TB instead of 2 (one per n-gram order).
-    Same persist → localCheckpoint(eager) → unpersist lifecycle as
-    ``winnow_pairs`` (cache-hygiene pinned by the registry sweep test)."""
+    Both live in one ``materialize.scope`` (cache-hygiene pinned by the
+    registry sweep test)."""
     docs = read_table(spark, sf_dir, "documents")
     toked = docs.select(TX.tokens(F.col("text")).alias("toks"))
     bigrams = F.when(
@@ -413,39 +412,34 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " i -> struct(toks[i] AS x, toks[i + 1] AS y))"
         ),
     ).otherwise(F.expr("array()").cast("array<struct<x:string,y:string>>"))
-    bi = (
-        toked.select(F.explode(bigrams).alias("b"))
-        .select(F.col("b.x").alias("x"), F.col("b.y").alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("cxy"))
-        .persist()
-    )
-    uni = (
-        toked.select(F.explode("toks").alias("t"))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    n_uni = uni.agg(F.sum("c").alias("nu"))
-    n_bi = bi.agg(F.sum("cxy").alias("nb"))
-    lift = (F.col("cxy").cast("double") / F.col("nb").cast("double")) / (
-        (F.col("cx").cast("double") / F.col("nu").cast("double"))
-        * (F.col("cy").cast("double") / F.col("nu").cast("double"))
-    )
-    out = (
-        bi.filter(F.col("cxy") >= 5)
-        .join(uni.select(F.col("t").alias("x"), F.col("c").alias("cx")), "x")
-        .join(uni.select(F.col("t").alias("y"), F.col("c").alias("cy")), "y")
-        .crossJoin(F.broadcast(n_uni))
-        .crossJoin(F.broadcast(n_bi))
-        .select("x", "y", "cxy", "cx", "cy", lift.alias("lift"))
-        .orderBy(F.col("lift").desc(), "x", "y")
-        .limit(20)
-    )
-    out = out.localCheckpoint(eager=True)
-    bi.unpersist(blocking=True)
-    uni.unpersist(blocking=True)
-    return out
+    with materialize.scope("text_pmi_topk") as m:
+        bi = m.cache(
+            toked.select(F.explode(bigrams).alias("b"))
+            .select(F.col("b.x").alias("x"), F.col("b.y").alias("y"))
+            .groupBy("x", "y")
+            .agg(F.count(F.lit(1)).alias("cxy"))
+        )
+        uni = m.cache(
+            toked.select(F.explode("toks").alias("t"))
+            .groupBy("t")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        n_uni = uni.agg(F.sum("c").alias("nu"))
+        n_bi = bi.agg(F.sum("cxy").alias("nb"))
+        lift = (F.col("cxy").cast("double") / F.col("nb").cast("double")) / (
+            (F.col("cx").cast("double") / F.col("nu").cast("double"))
+            * (F.col("cy").cast("double") / F.col("nu").cast("double"))
+        )
+        return m.checkpoint(
+            bi.filter(F.col("cxy") >= 5)
+            .join(uni.select(F.col("t").alias("x"), F.col("c").alias("cx")), "x")
+            .join(uni.select(F.col("t").alias("y"), F.col("c").alias("cy")), "y")
+            .crossJoin(F.broadcast(n_uni))
+            .crossJoin(F.broadcast(n_bi))
+            .select("x", "y", "cxy", "cx", "cy", lift.alias("lift"))
+            .orderBy(F.col("lift").desc(), "x", "y")
+            .limit(20)
+        )
 
 
 PMI_TOPK_SQL = f"""
@@ -744,35 +738,31 @@ def rel_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_nats_jetstream_spark.operators import kmv as KMV
 
     orders = read_table(spark, sf_dir, "orders")
-    ck = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.max(F.col("o_orderstatus") == "F").alias("in_a"),
-            F.max(F.col("o_orderstatus") == "O").alias("in_b"),
+    with materialize.scope("rel_kmv_intersection") as m:
+        ck = m.cache(
+            orders.groupBy("o_custkey").agg(
+                F.max(F.col("o_orderstatus") == "F").alias("in_a"),
+                F.max(F.col("o_orderstatus") == "O").alias("in_b"),
+            )
         )
-        .persist()
-    )
-    ka = KMV.kmv_sketch(ck.filter("in_a"), "o_custkey")
-    kb = KMV.kmv_sketch(ck.filter("in_b"), "o_custkey")
-    stats = KMV.kmv_intersection_stats(KMV.kmv_union_with_membership(ka, kb))
-    exact = ck.filter("in_a AND in_b").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_inter")
-    )
-    jac = F.col("n_match").cast("double") / F.col("n_union").cast("double")
-    out = (
-        stats.crossJoin(F.broadcast(exact))
-        .select(
-            "n_union",
-            "n_match",
-            "est_union",
-            jac.alias("jaccard_est"),
-            (jac * F.col("est_union")).alias("inter_est"),
-            "exact_inter",
+        ka = KMV.kmv_sketch(ck.filter("in_a"), "o_custkey")
+        kb = KMV.kmv_sketch(ck.filter("in_b"), "o_custkey")
+        stats = KMV.kmv_intersection_stats(KMV.kmv_union_with_membership(ka, kb))
+        exact = ck.filter("in_a AND in_b").agg(
+            F.count(F.lit(1)).cast("long").alias("exact_inter")
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    ck.unpersist(blocking=True)
-    return out
+        jac = F.col("n_match").cast("double") / F.col("n_union").cast("double")
+        return m.checkpoint(
+            stats.crossJoin(F.broadcast(exact))
+            .select(
+                "n_union",
+                "n_match",
+                "est_union",
+                jac.alias("jaccard_est"),
+                (jac * F.col("est_union")).alias("inter_est"),
+                "exact_inter",
+            )
+        )
 
 
 def _kmv_intersection_sql() -> str:
@@ -876,47 +866,44 @@ def scan_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_table(spark, sf_dir, "events")
     reg, rank = HLL.register_rank_cols("user_id")
-    # cached: ≤ m×days rows, consumed three times (grid days, grid
-    # registers, the fill join) — uncached each consumer re-scans events
-    daily = (
-        ev.filter(F.col("user_id").isNotNull())
-        .select(
-            F.to_date("ts").alias("day"), reg.alias("register"), rank.alias("rank")
+    with materialize.scope("scan_cumulative_uniques") as m:
+        # cached: ≤ m×days rows, consumed three times (grid days, grid
+        # registers, the fill join) — uncached each consumer re-scans events
+        daily = m.cache(
+            ev.filter(F.col("user_id").isNotNull())
+            .select(
+                F.to_date("ts").alias("day"), reg.alias("register"), rank.alias("rank")
+            )
+            .groupBy("day", "register")
+            .agg(F.max("rank").alias("max_rank"))
         )
-        .groupBy("day", "register")
-        .agg(F.max("rank").alias("max_rank"))
-        .persist()
-    )
-    # dense (day × observed-register) grid so a register seen on day 1 but
-    # silent on day 3 still carries into day 3's cumulative sketch
-    days = daily.select("day").distinct()
-    regs = daily.select("register").distinct()
-    grid = days.crossJoin(F.broadcast(regs))
-    filled = grid.join(daily, ["day", "register"], "left")
-    w = W.partitionBy("register").orderBy("day")
-    cum = filled.select(
-        "day",
-        "register",
-        F.max("max_rank")
-        .over(w.rowsBetween(W.unboundedPreceding, 0))
-        .alias("max_rank"),
-    ).filter(F.col("max_rank").isNotNull())
-    est = HLL.hll_estimate(cum, "day")
-    first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("day"))
-    new_users = first_seen.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
-    # dense over ALL observed days: a day where no user appears for the
-    # first time still has a cumulative count (carry-forward via coalesce 0)
-    exact = days.join(new_users, "day", "left").select(
-        "day",
-        F.sum(F.coalesce(F.col("new_users"), F.lit(0)))
-        .over(W.orderBy("day").rowsBetween(W.unboundedPreceding, 0))
-        .cast("long")
-        .alias("exact_cum"),
-    )
-    out = est.join(exact, "day").orderBy("day")
-    out = out.localCheckpoint(eager=True)
-    daily.unpersist(blocking=True)
-    return out
+        # dense (day × observed-register) grid so a register seen on day 1 but
+        # silent on day 3 still carries into day 3's cumulative sketch
+        days = daily.select("day").distinct()
+        regs = daily.select("register").distinct()
+        grid = days.crossJoin(F.broadcast(regs))
+        filled = grid.join(daily, ["day", "register"], "left")
+        w = W.partitionBy("register").orderBy("day")
+        cum = filled.select(
+            "day",
+            "register",
+            F.max("max_rank")
+            .over(w.rowsBetween(W.unboundedPreceding, 0))
+            .alias("max_rank"),
+        ).filter(F.col("max_rank").isNotNull())
+        est = HLL.hll_estimate(cum, "day")
+        first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("day"))
+        new_users = first_seen.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
+        # dense over ALL observed days: a day where no user appears for the
+        # first time still has a cumulative count (carry-forward via coalesce 0)
+        exact = days.join(new_users, "day", "left").select(
+            "day",
+            F.sum(F.coalesce(F.col("new_users"), F.lit(0)))
+            .over(W.orderBy("day").rowsBetween(W.unboundedPreceding, 0))
+            .cast("long")
+            .alias("exact_cum"),
+        )
+        return m.checkpoint(est.join(exact, "day").orderBy("day"))
 
 
 def _cumulative_uniques_sql() -> str:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.vector import sql_dot
 from duckdb_nats_jetstream_spark.operators import retrieval as R
 from duckdb_nats_jetstream_spark.operators import similarity as S
@@ -42,33 +43,20 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_TOPK_SQL = R.sql_bm25_topk(_QUERY_TERMS, topk=10)
 
 
-def _fused_checkpoint(fused, caches) -> DataFrame:
-    """Per-FUSION † lifecycle (r14, guide §2.6): materialize the fused
-    top-k in ONE eager checkpoint — the independent candidate subtrees
-    overlap inside that single action instead of serializing one eager
-    checkpoint per branch (the r13 per-branch form cost rrf_ann 0.69x /
-    rrf3 0.77x in the driver's bench) — then drop every deferred
-    candidate-base cache before returning."""
-    out = fused.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist(blocking=True)
-    return out
-
-
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+vector retrieval around document 0: RRF-fuse the
     BM25 top-100 (document 0 itself excluded — it is the query) with the
     exact cosine top-100 neighbors of vector 0, keep the fused top-10.
-    The BM25 leg defers its persist lifecycle to the fusion
-    (:func:`_fused_checkpoint`), so both candidate generators execute
-    inside one action."""
+    The BM25 leg caches its base in the fusion's scope and stays lazy, so
+    both candidate generators execute inside the fusion's one checkpoint
+    (guide §2.6)."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0)
     emb = read_table(spark, sf_dir, "embeddings")
-    caches: list[DataFrame] = []
-    lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, defer=caches)
-    vec = S.cosine_topk(emb, query_max_id=1, k=100)
-    fused = R.rrf_fuse(lex, vec, id_b="neighbor_id", rnk_b="rnk", topk=10)
-    return _fused_checkpoint(fused, caches)
+    with materialize.scope("sim_hybrid_rrf") as m:
+        lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, scope=m)
+        vec = S.cosine_topk(emb, query_max_id=1, k=100)
+        fused = R.rrf_fuse(lex, vec, id_b="neighbor_id", rnk_b="rnk", topk=10)
+        return m.checkpoint(fused)
 
 
 _RRF = R.DEFAULT_RRF_K
@@ -122,19 +110,19 @@ def sim_hybrid_rrf3(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0)
     emb = read_table(spark, sf_dir, "embeddings")
-    caches: list[DataFrame] = []
-    lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, defer=caches)
-    vec = S.cosine_topk(emb, query_max_id=1, k=100)
-    phr = R.bm25_phrase_topk(docs, _QUERY_PHRASES, topk=100, defer=caches)
-    fused = R.rrf_fuse_many(
-        [
-            (lex, "doc_id", "rnk", "lex_rnk"),
-            (vec, "neighbor_id", "rnk", "vec_rnk"),
-            (phr, "doc_id", "rnk", "phr_rnk"),
-        ],
-        topk=10,
-    )
-    return _fused_checkpoint(fused, caches)
+    with materialize.scope("sim_hybrid_rrf3") as m:
+        lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, scope=m)
+        vec = S.cosine_topk(emb, query_max_id=1, k=100)
+        phr = R.bm25_phrase_topk(docs, _QUERY_PHRASES, topk=100, scope=m)
+        fused = R.rrf_fuse_many(
+            [
+                (lex, "doc_id", "rnk", "lex_rnk"),
+                (vec, "neighbor_id", "rnk", "vec_rnk"),
+                (phr, "doc_id", "rnk", "phr_rnk"),
+            ],
+            topk=10,
+        )
+        return m.checkpoint(fused)
 
 
 HYBRID_RRF3_SQL = f"""
@@ -195,17 +183,17 @@ def sim_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays hash-parity checkable."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0)
     emb = read_table(spark, sf_dir, "embeddings")
-    caches: list[DataFrame] = []
-    lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, defer=caches)
-    ann = S.ivf_topk(emb, query_max_id=1, k=100, n_clusters=16, n_probe=4)
-    fused = R.rrf_fuse_many(
-        [
-            (lex, "doc_id", "rnk", "lex_rnk"),
-            (ann, "neighbor_id", "rnk", "ann_rnk"),
-        ],
-        topk=10,
-    )
-    return _fused_checkpoint(fused, caches)
+    with materialize.scope("sim_hybrid_rrf_ann") as m:
+        lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, scope=m)
+        ann = S.ivf_topk(emb, query_max_id=1, k=100, n_clusters=16, n_probe=4)
+        fused = R.rrf_fuse_many(
+            [
+                (lex, "doc_id", "rnk", "lex_rnk"),
+                (ann, "neighbor_id", "rnk", "ann_rnk"),
+            ],
+            topk=10,
+        )
+        return m.checkpoint(fused)
 
 
 def _hybrid_rrf_ann_sql() -> str:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions import classifier as C
 from duckdb_nats_jetstream_spark.tables import read_table
 
@@ -139,10 +140,10 @@ def docs_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # kept is top-k-BOUNDED (≤ _V4_TOPK rows at any corpus size) with two
     # consumers (the text fetch's broadcast side + the final output
-    # join): eager-checkpoint it so the quota+budget chain over the
-    # corpus executes ONCE (the †-lifecycle; without this each consumer
-    # re-ran both corpus shuffles — measured 2× the stage-1/2 cost)
-    kept = kept.localCheckpoint(eager=True)
+    # join): eager materialize.checkpoint so the quota+budget chain over
+    # the corpus executes ONCE (without this each consumer re-ran both
+    # corpus shuffles — measured 2× the stage-1/2 cost)
+    kept = materialize.checkpoint(kept, eager=True)
     kept_text = raw.select("doc_id", "text").join(
         F.broadcast(kept.select("doc_id")), "doc_id"
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from duckdb_nats_jetstream_spark import materialize
 from duckdb_nats_jetstream_spark.functions.exact import (
     DEC,
     NET_PRICE_SQL,
@@ -356,17 +357,17 @@ def excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Left lazy, Catalyst plans the lineitem⋈part aggregate twice (the
     # threshold branch and the qualifying branch each re-scan lineitem —
     # a double scan of the largest fact table at 100 TB). Materialize it
-    # ONCE (localCheckpoint; the guard below is the materializing action),
+    # ONCE (a lazy checkpoint; the guard below is the materializing action),
     # then route the relation that actually joins supplier — qualifying,
     # supplier-cardinality = group-cardinality shaped — through the
     # runtime-sized guard: broadcast hint iff the realized count is safe,
     # spill-safe merge otherwise. (A hint on per_supp itself would not
     # propagate through the crossJoin/filter derivation to the semi join.)
-    per_supp = (
+    per_supp = materialize.checkpoint(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")
-        .agg(dsum("l_quantity", "qty"))
-        .localCheckpoint(eager=False)
+        .agg(dsum("l_quantity", "qty")),
+        eager=False,
     )
     threshold = per_supp.agg(
         (F.lit(1.2).cast("double") * F.avg("qty")).alias("cut")

@@ -18,6 +18,8 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
   bounded-by-construction (k-row top-k lists, per-iteration centroid
   pulls, vocabulary-bound BPE merges); a NEW site must be consciously
   added here with the same justification, or it is presumed unbounded.
+- DataFrame caching and checkpoint calls live only in ``materialize.py``
+  (the scoped helper releases every cache even when a build raises).
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -143,3 +145,34 @@ def test_collect_sites_are_pinned():
         f"{_COLLECT_ALLOWLIST} — a new site is presumed UNBOUNDED until "
         "pinned here with a boundedness argument"
     )
+
+
+#: DataFrame caching/checkpoint calls that only ``materialize.py`` may make:
+#: every other module goes through ``materialize.scope``/``checkpoint``, so
+#: each cache is released in one ``finally`` even when a build raises.
+_MATERIALIZE_CALLS = {"persist", "unpersist", "localCheckpoint", "cache"}
+
+
+def test_materialization_only_in_materialize():
+    """``.persist(``/``.unpersist(``/``.cache()``/``.localCheckpoint(`` are
+    called only in ``materialize.py``. Checked on the AST, so a method
+    named in a string or docstring (``plans/audit.py`` names them to
+    hook them) is not a call; ``m.cache(df)`` — the scope's own method,
+    which takes an argument — is not ``DataFrame.cache()``."""
+    bad = []
+    for p in _py_files():
+        if _rel(p) == "materialize.py":
+            continue
+        with open(p, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MATERIALIZE_CALLS
+            ):
+                continue
+            if node.func.attr == "cache" and (node.args or node.keywords):
+                continue
+            bad.append(f"{_rel(p)}:{node.lineno} .{node.func.attr}(")
+    assert not bad, f"materialize outside materialize.py: {bad}"

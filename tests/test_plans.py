@@ -4,6 +4,8 @@ query survives a 100× scale-up."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from duckdb_nats_jetstream_spark.plans.explain import (
@@ -54,30 +56,143 @@ def test_codegen_on_hot_paths(spark, sf_dir):
     assert_wholestage_codegen(lambda: scan_json_cast_agg(spark, sf_dir), spark)
 
 
-def test_registry_wide_no_cartesian_sweep(spark, sf_dir):
+def _classic_dataframe():
+    # Spark 4: queries run on the classic concrete class, whose own methods
+    # override any patch on the abstract pyspark.sql.DataFrame
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:  # older layout
+        from pyspark.sql import DataFrame
+    return DataFrame
+
+
+class _CheckpointFault(Exception):
+    """Raised by the patched checkpoint in the error-path test."""
+
+
+@pytest.fixture(scope="module")
+def registry_sweep(spark, sf_dir):
+    """Build every registry query once: cartesian offenders, cache leakers,
+    and the queries whose build reaches ``localCheckpoint`` (the error-path
+    test re-runs only those, so the registry is built once per module)."""
+    from duckdb_nats_jetstream_spark.queries import full_registry
+
+    DataFrame = _classic_dataframe()
+    orig = DataFrame.localCheckpoint
+    reached = [False]
+
+    def recording(self, *args, **kwargs):
+        reached[0] = True
+        return orig(self, *args, **kwargs)
+
+    offenders, leakers, checkpointers = [], [], []
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    DataFrame.localCheckpoint = recording
+    try:
+        for name, (fn, _sql) in full_registry().items():
+            reached[0] = False
+            plan = physical_plan(fn(spark, sf_dir))
+            if reached[0]:
+                checkpointers.append(name)
+            if "CartesianProduct" in plan:
+                offenders.append(name)
+            # operators that cache intermediates must release the SAME
+            # handle before returning — a leaked cache entry pins executor
+            # storage memory for the rest of the application AND silently
+            # swaps later equivalent plans to InMemoryTableScan (found live:
+            # winnow_pairs df_cap branch rebound fps before unpersist)
+            if not cache_mgr.isEmpty():
+                leakers.append(name)
+                cache_mgr.clearCache()
+    finally:
+        DataFrame.localCheckpoint = orig
+    return offenders, leakers, checkpointers
+
+
+def test_registry_wide_no_cartesian_sweep(registry_sweep):
     """EVERY registry query's physical plan is cartesian-free — a blanket
     regression net over the whole capability surface (a lost join condition
     or broadcast hint anywhere becomes a test failure, not a 100 TB
     incident). Plans build at sf0.001 so the sweep stays cheap."""
-    from duckdb_nats_jetstream_spark.queries import full_registry
-
-    offenders = []
-    leakers = []
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    for name, (fn, _sql) in full_registry().items():
-        plan = physical_plan(fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
-            offenders.append(name)
-        # operators that persist() intermediates must unpersist the SAME
-        # handle before returning — a leaked cache entry pins executor
-        # storage memory for the rest of the application AND silently
-        # swaps later equivalent plans to InMemoryTableScan (found live:
-        # winnow_pairs df_cap branch rebound fps before unpersist)
-        if not cache_mgr.isEmpty():
-            leakers.append(name)
-            cache_mgr.clearCache()
+    offenders, leakers, _ = registry_sweep
     assert not offenders, f"cartesian products in: {offenders}"
     assert not leakers, f"queries leaking cache entries: {leakers}"
+
+
+def test_registry_error_path_releases_caches(spark, sf_dir, registry_sweep):
+    """Error-path twin of the sweep above: every registry query whose build
+    reaches a checkpoint has that checkpoint raise once, and the failed
+    build must still leave the cache manager empty — a materialization
+    scope releases its caches in a ``finally``, not only on success."""
+    from duckdb_nats_jetstream_spark.queries import full_registry
+
+    checkpointers = registry_sweep[2]
+    # the sweep found the cache-holding builds this test exists for
+    assert {"docs_dsir_select", "sim_hybrid_rrf3", "dedup_minhash_lsh"} <= set(
+        checkpointers
+    ), checkpointers
+    DataFrame = _classic_dataframe()
+    orig = DataFrame.localCheckpoint
+    armed = [False]
+
+    def faulty(self, *args, **kwargs):
+        if armed[0]:
+            armed[0] = False
+            raise _CheckpointFault()
+        return orig(self, *args, **kwargs)
+
+    registry = full_registry()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    missed, leakers = [], []
+    DataFrame.localCheckpoint = faulty
+    try:
+        for name in checkpointers:
+            armed[0] = True
+            try:
+                registry[name][0](spark, sf_dir)
+                missed.append(name)
+            except _CheckpointFault:
+                pass
+            if not cache_mgr.isEmpty():
+                leakers.append(name)
+                cache_mgr.clearCache()
+    finally:
+        DataFrame.localCheckpoint = orig
+    assert not leakers, f"failed builds leaking cache entries: {leakers}"
+    assert not missed, f"builds that swallowed the checkpoint fault: {missed}"
+
+
+def test_dsir_missing_keep_col_releases_cache(spark):
+    """The build raises AFTER the (doc, bucket) counts are cached."""
+    from duckdb_nats_jetstream_spark.operators.dsir import dsir_select
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta {i}", i % 3 == 0) for i in range(12)],
+        "doc_id long, text string, t boolean",
+    )
+    with pytest.raises(AnalysisException):
+        dsir_select(
+            docs, is_target=F.col("t"), topk=5, n_buckets=16, keep_cols=["no_such_col"]
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_fusion_raising_after_scoped_bm25_releases_cache(spark):
+    """A hybrid fusion that fails to build after its BM25 leg cached its
+    base in the fusion's scope leaves no cache entry behind."""
+    from duckdb_nats_jetstream_spark import materialize
+    from duckdb_nats_jetstream_spark.operators import retrieval as R
+
+    docs = spark.createDataFrame(
+        [(i, f"term{i % 3} filler words number{i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    with pytest.raises(AnalysisException):
+        with materialize.scope("fusion") as m:
+            lex = R.bm25_topk(docs, ["term0"], topk=5, scope=m)
+            assert len(m.cached) == 1
+            m.checkpoint(R.rrf_fuse(lex, lex, id_b="no_such_col"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_winnow_and_mixture_are_pure_jvm(spark, sf_dir):

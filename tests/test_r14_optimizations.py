@@ -74,13 +74,14 @@ def test_components_bounded_min_id_via_one_leaf_edge(spark):
     assert got == {0: 0, 3: 0, 7: 0, 12: 0}
 
 
-# --- components: lazy-checkpoint convergence fold (one action per round) ------
+# --- components: convergence count rides the round's checkpoint (one action) --
 
 
 def test_components_converged_graph_exits_after_one_loop_round(spark):
     """r14 folds the convergence probe into the round's materialization
-    (lazy localCheckpoint consumed by the changed-count job — one driver
-    action per round instead of eager-checkpoint + isEmpty). Behavior
+    (an ``observe`` metric counting changed labels rides the round's
+    EAGER checkpoint job — one driver action per round instead of
+    eager-checkpoint + isEmpty). Behavior
     pin: a graph whose init aggregation already reaches the fixpoint
     (single edge) must run exactly ONE confirming loop round — the init
     (round 1) plus the round that observes changed == 0 — and the labels
@@ -142,10 +143,11 @@ def test_kmv_flagged_union_below_k_is_exact(spark):
     assert got.est_union == 3.0  # below-k arm: exact count
 
 
-# --- bm25 defer lifecycle: lazy branch == eager branch, cache handed back -----
+# --- bm25 in a caller's scope: lazy branch == eager branch, base cached there -
 
 
-def test_bm25_topk_defer_matches_eager(spark):
+def test_bm25_topk_scoped_matches_eager(spark):
+    from duckdb_nats_jetstream_spark import materialize
     from duckdb_nats_jetstream_spark.operators.retrieval import bm25_topk
 
     docs = spark.createDataFrame(
@@ -154,14 +156,12 @@ def test_bm25_topk_defer_matches_eager(spark):
     )
     eager = {tuple(r) for r in bm25_topk(docs, ["term0"], topk=5).collect()}
 
-    caches: list = []
-    deferred = bm25_topk(docs, ["term0"], topk=5, defer=caches)
-    assert len(caches) == 1, "deferred base cache must be handed back"
-    got = {tuple(r) for r in deferred.collect()}
-    for c in caches:
-        c.unpersist(blocking=True)
+    with materialize.scope("test") as m:
+        deferred = bm25_topk(docs, ["term0"], topk=5, scope=m)
+        assert len(m.cached) == 1, "the base cache must be handed to the scope"
+        got = {tuple(r) for r in deferred.collect()}
     assert got == eager and got
-    # the deferred path must leave nothing behind once the caller cleans up
+    # the scoped path must leave nothing behind once the scope exits
     jspark = spark._jsparkSession
     assert jspark.sharedState().cacheManager().isEmpty()
 
@@ -177,7 +177,7 @@ def test_hybrid_fusion_single_checkpoint(spark, sf_dir):
         sim_hybrid_rrf(spark, sf_dir)
     ckpts = [p for p in plans if "InMemoryTableScan" in p]
     assert len(plans) == 1, f"expected one fused materialization, got {len(plans)}"
-    assert ckpts, "fused plan must read the deferred BM25 base from cache"
+    assert ckpts, "fused plan must read the scoped BM25 base from cache"
     jspark = spark._jsparkSession
     assert jspark.sharedState().cacheManager().isEmpty()
 
